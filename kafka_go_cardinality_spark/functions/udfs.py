@@ -372,4 +372,3 @@ def make_chunker_udtf():
                 yield i // 3, " ".join(toks[i : i + 3])
 
     return Chunker
-

@@ -2812,6 +2812,12 @@ def mmr_select(embeddings: DataFrame, k: int = MMR_K) -> DataFrame:
     # job-scheduling overhead, not data) with bit-identical output (the
     # arithmetic is untouched — same plan, same doubles; oracle parity
     # re-proved at all three SFs).
+    # CAVEAT (both checkpoint sites): a local checkpoint truncates
+    # lineage and keeps its blocks unreplicated in executor storage.  A
+    # lost block (executor death, or release by dynamic allocation
+    # before the next round reads it) is NOT recomputed from lineage —
+    # the round's job fails.  In local mode that means a lost session
+    # anyway; a cluster run must keep those executors for the k rounds.
     cand = (
         base.filter(F.col("vec_id") != qid)
         .select(

@@ -19,6 +19,7 @@ from __future__ import annotations
 import os
 import tempfile
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -32,6 +33,11 @@ from kafka_go_cardinality_spark.streaming import (
     sliding_cardinality,
     stream_cardinality,
     stream_exact_cardinality,
+)
+from kafka_go_cardinality_spark.streaming.pipeline import (
+    SHUFFLE_PARTITIONS,
+    conf_overrides,
+    core_capped_partitions,
 )
 
 # One wire dump per (process, sf_dir): five streaming queries replay the
@@ -71,7 +77,10 @@ def _wire_dir(spark: SparkSession, sf_dir: str) -> str:
 
 
 # ~512 KiB of wire input per state-store partition, capped at the
-# session's shuffle.partitions.  A streaming query's state partition
+# cores that run the replay: min(session shuffle.partitions,
+# defaultParallelism) — the same cap replay_to_memory applies to every
+# replay (pipeline.core_capped_partitions), so this byte rule only ever
+# LOWERS the count beneath it.  A streaming query's state partition
 # count is frozen at the first checkpoint and every micro-batch pays a
 # per-partition state commit (~40 ms of file I/O even when empty), so it
 # must be sized to the job like shuffle.partitions on a batch job — both
@@ -79,9 +88,9 @@ def _wire_dir(spark: SparkSession, sf_dir: str) -> str:
 # 5× longer committing empty state files than computing, while ONE
 # partition over a 5 MiB replay serializes the whole aggregation behind
 # a single state task (2× wall).  At 100 TB the byte-derived count is
-# astronomically high and the configured shuffle.partitions ceiling is
-# what governs — the divisor exists to stop tiny replays from paying
-# per-partition commit overhead for parallelism they can't use.
+# astronomically high and the core cap is what governs — the divisor
+# exists to stop tiny replays from paying per-partition commit overhead
+# for parallelism they can't use.
 # Re-probed r10 (verdict item 3): a 256 KiB divisor (12 partitions at
 # the 3 MiB sf0.1 wire) looked better on single-query A/Bs but is
 # pass-to-pass variance; min-of-2 across the stateful set shows 6 ≈ 8
@@ -112,6 +121,18 @@ def _state_partitions(wire_path: str, ceiling: int, stores: int = 1) -> int:
     return max(1, min(ceiling, -(-total // per_part)))
 
 
+@contextmanager
+def _sized_state(spark: SparkSession, wire_path: str, stores: int = 1):
+    """Run the body with shuffle/state partitions sized to ``wire_path``
+    by the byte rule under the core cap; the session's count is restored
+    on exit.  Streams read the count at query start (stream planning has
+    no AQE to coalesce later), so the replay must start inside the body.
+    ``stores`` = stateful operators stacked in the built plan."""
+    n = _state_partitions(wire_path, core_capped_partitions(spark), stores)
+    with conf_overrides(spark, {SHUFFLE_PARTITIONS: str(n)}):
+        yield
+
+
 # Latest memory-sink table per replay prefix: a memory sink pins its
 # result rows in DRIVER memory for the life of the session, so a
 # 197-query bench (×2 passes) would otherwise accumulate hundreds of
@@ -131,20 +152,10 @@ def _replay(
     stores: int = 1,
 ) -> DataFrame:
     wire = _wire_dir(spark, sf_dir)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    # Read at query start (stream planning has no AQE to coalesce later);
-    # restored after the blocking replay finishes.  ``stores`` = stateful
-    # operators stacked in the built plan (see _state_partitions).
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(_state_partitions(wire, int(prev), stores)),
-    )
-    try:
+    table = f"{prefix}_{uuid.uuid4().hex[:8]}"
+    with _sized_state(spark, wire, stores):
         parsed = parse_user_events(file_user_source(spark, wire))
-        table = f"{prefix}_{uuid.uuid4().hex[:8]}"
         replay_to_memory(build(parsed), table, output_mode=output_mode)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     old = _LAST_REPLAY_TABLE.get(prefix)
     if old is not None:
         spark.catalog.dropTempView(old)
@@ -409,13 +420,8 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     wire = _typed_wire_dir(spark, sf_dir)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        # 4 internal stores per partition for a stream-stream join
-        str(_state_partitions(wire, int(prev), stores=4)),
-    )
-    try:
+    # 4 internal stores per partition for a stream-stream join
+    with _sized_state(spark, wire, stores=4):
         schema = StructType(
             [
                 StructField("uid", StringType()),
@@ -438,8 +444,6 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined = interval_join_streams(views, clicks)
         table = f"ssj_{uuid.uuid4().hex[:8]}"
         replay_to_memory(joined, table, output_mode="append")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(table)
 
 
@@ -483,17 +487,11 @@ def q_stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         merged.write.mode("overwrite").parquet(path)
         versions.append(path)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_state_partitions(wire, int(prev)))
-    )
     # Skip the trailing no-data micro-batch (the replay_to_memory
     # rationale): in update mode it emits zero keys, so its only effect
     # here was one extra no-op upsert version written and swapped.
-    ndb_key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev_ndb = spark.conf.get(ndb_key, None)
-    spark.conf.set(ndb_key, "false")
-    try:
+    no_ndb = {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
+    with _sized_state(spark, wire), conf_overrides(spark, no_ndb):
         parsed = parse_user_events(
             spark.readStream.option("maxFilesPerTrigger", "3").text(wire)
         )
@@ -516,12 +514,6 @@ def q_stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "q_stream_upsert_sink replay did not finish within 300 s "
                 f"({len(versions)} batches committed)"
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        if prev_ndb is not None:
-            spark.conf.set(ndb_key, prev_ndb)
-        else:
-            spark.conf.unset(ndb_key)
     return spark.read.parquet(versions[-1])
 
 
@@ -1194,16 +1186,9 @@ def q_stream_vec_neardup_distinct(
     # ceiling's per-partition state commits (the _WIRE_BYTES_PER_
     # STATE_PARTITION rationale).
     wire = _vec_wire_dir(spark, sf_dir)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(_state_partitions(wire, int(prev))),
-    )
     table = f"stream_vec_neardup_d_{uuid.uuid4().hex[:8]}"
-    try:
+    with _sized_state(spark, wire):
         replay_to_memory(src, table, output_mode="append")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     old = _LAST_REPLAY_TABLE.get("stream_vec_neardup_d")
     if old is not None:
         spark.catalog.dropTempView(old)

@@ -20,6 +20,7 @@ from kafka_go_cardinality_spark.streaming import (
     replay_to_memory,
     stop_gracefully,
     stream_cardinality,
+    stream_exact_cardinality,
     synthetic_wire_frame,
     to_stat_json,
 )
@@ -657,8 +658,6 @@ def test_replays_identical_without_no_data_batch(spark, monkeypatch):
     silent truncation.  q_stream_upsert_sink manages the conf inside its
     own foreachBatch writer (no replay_to_memory seam); its merged table
     equals the batch aggregate by oracle parity either way."""
-    import functools
-
     import __spark_entry__ as entry
     from kafka_go_cardinality_spark.streaming import pipeline as pl
     import kafka_go_cardinality_spark.queries_streaming as qsm
@@ -688,3 +687,76 @@ def test_replays_identical_without_no_data_batch(spark, monkeypatch):
         monkeypatch.setattr(qsm, "replay_to_memory", orig)
         without = sorted(map(tuple, qs[name](spark, sf).collect()))
         assert with_ndb == without, name
+
+
+def _state_instances(query) -> int:
+    return query.lastProgress.stateOperators[0].numStateStoreInstances
+
+
+def test_replay_caps_state_partitions_at_cores(spark, wire_dir, monkeypatch):
+    """replay_to_memory runs a replay at min(shuffle.partitions,
+    defaultParallelism) state partitions — partitions beyond the cores
+    only add per-batch state loads and commits — for the replay alone:
+    the session's count is unchanged afterwards.  The cap moves no
+    rows: the exact twin replayed capped and uncapped is identical."""
+    from kafka_go_cardinality_spark.streaming import pipeline as pl
+
+    key = "spark.sql.shuffle.partitions"
+    cores = spark.sparkContext.defaultParallelism
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(2 * cores))
+    try:
+        name = f"t_{uuid.uuid4().hex[:8]}"
+        parsed = parse_user_events(file_user_source(spark, wire_dir))
+        query = replay_to_memory(pl.stream_grain_fanout(parsed), name)
+        assert _state_instances(query) == cores
+        assert spark.conf.get(key) == str(2 * cores)
+
+        def exact_day():
+            name = f"t_{uuid.uuid4().hex[:8]}"
+            query = replay_to_memory(
+                stream_exact_cardinality(parsed, "day"), name
+            )
+            rows = sorted(map(tuple, spark.table(name).collect()))
+            return _state_instances(query), rows
+
+        capped_n, capped = exact_day()
+        monkeypatch.setattr(
+            pl, "core_capped_partitions", lambda s: int(s.conf.get(key))
+        )
+        uncapped_n, uncapped = exact_day()
+        assert (capped_n, uncapped_n) == (cores, 2 * cores)
+        assert capped and capped == uncapped
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_replay_start_failure_leaves_session_clean(
+    spark, wire_dir, tmp_path, monkeypatch
+):
+    """A replay whose query fails at start() (append-mode aggregation
+    without a watermark is rejected there) must propagate the error,
+    restore both confs it overrides and remove its checkpoint dir."""
+    from pyspark.errors import AnalysisException
+
+    monkeypatch.setenv("KGC_CHECKPOINT_SCRATCH", str(tmp_path))
+    keys = (
+        "spark.sql.streaming.noDataMicroBatches.enabled",
+        "spark.sql.shuffle.partitions",
+    )
+    prev_parts = spark.conf.get(keys[1])
+    # Above the core count, so a leaked cap would show.
+    spark.conf.set(keys[1], str(2 * spark.sparkContext.defaultParallelism))
+    try:
+        before = {k: spark.conf.get(k, None) for k in keys}
+        parsed = parse_user_events(file_user_source(spark, wire_dir))
+        with pytest.raises(AnalysisException):
+            replay_to_memory(
+                parsed.groupBy("uid").count(),
+                f"t_{uuid.uuid4().hex[:8]}",
+                output_mode="append",
+            )
+        assert {k: spark.conf.get(k, None) for k in keys} == before
+        assert not list(tmp_path.glob("kgc_ckpt_*"))
+    finally:
+        spark.conf.set(keys[1], prev_parts)
