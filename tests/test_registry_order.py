@@ -38,27 +38,46 @@ def test_proven_block_is_oldest_evidence_first():
     queries whose defining module changed since the last round-close
     commit aged BACK by the churn boost (r9 verdict item 6): ascending
     EFFECTIVE age across the block, recomputed here from the same
-    primitives the registry uses."""
+    primitives the registry uses.  Rows-only queries the head budget
+    deferred leave that order on purpose: they sit together at the
+    slots right after the sweep head, still oldest-first among
+    themselves."""
     from kafka_go_cardinality_spark.queries import (
         CHURN_BOOST,
         ORACLE_SQL,
         ROWS_ONLY_STALENESS_PENALTY,
+        SWEEP_HEAD,
         _CHURNED,
+        _HEAD_DEFERRED,
         _age_capped,
     )
 
     age = driver_evidence.evidence_age()
     proven = driver_evidence.proven_names()
     pending = driver_evidence.rows_only_green_names() & set(ORACLE_SQL)
+
+    def effective(n):
+        return (
+            age[n]
+            + (0 if n in ORACLE_SQL else ROWS_ONLY_STALENESS_PENALTY)
+            - (CHURN_BOOST if n in _CHURNED else 0)
+        )
+
     ages = [
-        age[n]
-        + (0 if n in ORACLE_SQL else ROWS_ONLY_STALENESS_PENALTY)
-        - (CHURN_BOOST if n in _CHURNED else 0)
+        effective(n)
         for n in QUERIES
         if n in proven and n in age and n not in pending
         and not _age_capped(n)  # capped queries jump the penalty order
+        and n not in _HEAD_DEFERRED  # moved out of the head by the budget
     ]
     assert ages == sorted(ages)
+    names = list(QUERIES)
+    deferred = [n for n in names if n in _HEAD_DEFERRED]
+    assert [names.index(n) for n in deferred] == list(
+        range(SWEEP_HEAD, SWEEP_HEAD + len(deferred))
+    )
+    deferred_ages = [effective(n) for n in deferred]
+    assert deferred_ages == sorted(deferred_ages)
 
 
 def test_age_cap_overrides_penalties():
@@ -216,6 +235,64 @@ def test_sweep_head_is_mostly_hash_capable():
     head = list(QUERIES)[:50]
     oracled = sum(1 for n in head if n in ORACLE_SQL)
     assert oracled >= 44, f"only {oracled}/50 head slots are hash-capable"
+
+
+def test_head_budget_defers_surplus_rows_only_queries():
+    """The head budget pass on a synthetic order (no artifacts, no git):
+    27 oracled queries, then nine tied rows-only ones, then oracled.
+    At most ROWS_ONLY_HEAD_BUDGET rows-only queries stay in the first
+    SWEEP_HEAD slots; the surplus moves, in order, to slot SWEEP_HEAD;
+    a stale-red and an age-capped rows-only query keep their places and
+    count against the budget.  Unproven (stale-red or never-checked) and
+    age-capped queries never move, even past the budget."""
+    from kafka_go_cardinality_spark.queries import (
+        ROWS_ONLY_HEAD_BUDGET,
+        SWEEP_HEAD,
+        _bound_rows_only_head,
+    )
+
+    tied = [f"r_tied_{i}" for i in range(9)]
+    names = (
+        ["r_red", "r_capped"]
+        + [f"o_{i:03d}" for i in range(27)]
+        + tied
+        + [f"o_{i:03d}" for i in range(27, 80)]
+    )
+    stale_red = {"r_red"}
+    proven = set(names) - stale_red
+
+    def oracled(n):
+        return n.startswith("o_")
+
+    order, deferred = _bound_rows_only_head(
+        names,
+        oracled=oracled,
+        proven=proven.__contains__,
+        capped={"r_capped"}.__contains__,
+    )
+
+    assert sorted(order) == sorted(names)
+    head = order[:SWEEP_HEAD]
+    assert sum(1 for n in head if not oracled(n)) <= ROWS_ONLY_HEAD_BUDGET
+    assert order[:2] == ["r_red", "r_capped"]
+    kept = ROWS_ONLY_HEAD_BUDGET - 2
+    assert [order.index(n) for n in tied[:kept]] == list(range(29, 29 + kept))
+    assert deferred == tied[kept:]
+    assert order[SWEEP_HEAD : SWEEP_HEAD + len(deferred)] == deferred
+    assert [n for n in order if oracled(n)] == [n for n in names if oracled(n)]
+
+    pinned_tied = _bound_rows_only_head(
+        names,
+        oracled=oracled,
+        proven=proven.__contains__,
+        capped=set(tied).__contains__,
+    )
+    assert pinned_tied == (names, [])
+    nothing = frozenset().__contains__
+    unproven = _bound_rows_only_head(
+        names, oracled=oracled, proven=nothing, capped=nothing
+    )
+    assert unproven == (names, [])
 
 
 def test_is_green_semantics():
