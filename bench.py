@@ -240,24 +240,8 @@ def main() -> int:
     }
     repo = os.path.dirname(os.path.abspath(__file__))
     # Full artifact: every query, both pass timings and the min.
-    # BENCH_FULL.json is the working pointer (overwritten each run); the
-    # r{NN} snapshot survives per round so r-to-r per-query diffs are
-    # computable from git alone (round = driver CORRECTNESS rounds + 1).
-    try:
-        from kafka_go_cardinality_spark import driver_evidence
-
-        rnd = driver_evidence.round_index() + 1
-        snapshots = ["BENCH_FULL.json", f"BENCH_FULL_r{rnd:02d}.json"]
-    except (ImportError, OSError, ValueError) as exc:
-        # Narrow on purpose: a silent bare-except made a missing per-round
-        # snapshot indistinguishable from an intentionally snapshot-less
-        # run (r7 advice).  Anything else propagates.
-        print(f"bench: no per-round snapshot ({exc!r}); writing pointer only",
-              file=sys.stderr)
-        snapshots = ["BENCH_FULL.json"]
-    for fname in snapshots:
-        with open(os.path.join(repo, fname), "w") as fh:
-            json.dump(payload, fh, indent=1, sort_keys=True)
+    with open(os.path.join(repo, "BENCH_FULL.json"), "w") as fh:
+        json.dump(payload, fh, indent=1, sort_keys=True)
     # Stdout line: complete and parseable within the driver's 2000-char
     # tail — totals + throughput + the slowest queries (trimmed to fit).
     # loadavg rides the LINE, not just BENCH_FULL.json (r10 verdict item

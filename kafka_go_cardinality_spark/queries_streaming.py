@@ -530,76 +530,6 @@ def q_stream_grain_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _replay(spark, sf_dir, stream_grain_fanout, "stream_fanout")
 
 
-def _register_stream_profile() -> None:
-    """[E19+] Register the Spark 4 ``transformWithStateInPandas`` typed-
-    state profile operator — ONLY where the state-server protocol's
-    ``google.protobuf`` dependency exists (streaming/stateful_v2.py
-    documents the gate; this container lacks it and installs are
-    off-limits).  Environments with the dep get the query + a full
-    DuckDB oracle: counters are monotone, so max-over-update-emissions
-    per key equals the batch aggregate."""
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        return
-
-    @query(
-        "q_stream_profile",
-        """
-        SELECT user_id, count(*) AS n_events,
-               count(DISTINCT event_type) AS n_types
-        FROM events
-        GROUP BY user_id
-        """,
-    )
-    def q_stream_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """[E19+] Per-user lifetime profile via transformWithStateInPandas
-        (ValueState counter + MapState-as-set), replayed availableNow into
-        a memory sink; update-mode emissions collapse to the final state
-        with max() since both counters are monotone
-        (streaming/stateful_v2.py)."""
-        from kafka_go_cardinality_spark.streaming.stateful_v2 import (
-            user_profile_stream,
-        )
-
-        d = tempfile.mkdtemp(prefix="kgc_profile_wire_")
-        load_table(spark, sf_dir, "events").select(
-            "user_id", "event_type"
-        ).coalesce(4).write.mode("overwrite").json(d)
-        prev = spark.conf.get(
-            "spark.sql.streaming.stateStore.providerClass", None
-        )
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        try:
-            src = spark.readStream.schema(
-                "user_id long, event_type string"
-            ).json(d)
-            table = f"stream_profile_{uuid.uuid4().hex[:8]}"
-            replay_to_memory(
-                user_profile_stream(src), table, output_mode="update"
-            )
-        finally:
-            if prev is not None:
-                spark.conf.set(
-                    "spark.sql.streaming.stateStore.providerClass", prev
-                )
-            else:
-                spark.conf.unset(
-                    "spark.sql.streaming.stateStore.providerClass"
-                )
-        return spark.table(table).groupBy("user_id").agg(
-            F.max("n_events").alias("n_events"),
-            F.max("n_types").alias("n_types"),
-        )
-
-
-_register_stream_profile()
-
-
 # Vector wire dump for the online-embedding-ingest query: one per
 # (process, sf_dir), like _WIRE_DIRS.  Doubles are widened BEFORE
 # to_json so the JSONL round-trip is exact (Jackson serializes doubles

@@ -7,6 +7,12 @@ schema.
 
 from __future__ import annotations
 
+import inspect
+import json
+import os
+import subprocess
+import sys
+
 import pytest
 
 import __spark_entry__ as entry_mod
@@ -14,6 +20,60 @@ from tests.conftest import assert_frames_match
 
 QUERIES = entry_mod.queries()
 ORACLES = entry_mod.oracle_sql()
+
+
+# The family modules in the order kafka_go_cardinality_spark/queries.py
+# imports them.
+FAMILIES = (
+    "queries_cardinality",
+    "queries_relational",
+    "queries_datapipe",
+    "queries_analytics",
+    "queries_streaming",
+    "queries_udf",
+)
+
+_IMPORT_AUDIT = """
+import fnmatch, json, os, sys
+seen = []
+def hook(event, args):
+    if event == "subprocess.Popen":
+        seen.append([event, repr(args[1])])
+    elif event == "open" and isinstance(args[0], (str, bytes)):
+        base = os.path.basename(os.fsdecode(args[0]))
+        if fnmatch.fnmatch(base, "CORRECTNESS_r*.json"):
+            seen.append([event, base])
+sys.addaudithook(hook)
+import __spark_entry__
+print(json.dumps(seen))
+"""
+
+
+def test_registry_order_is_static():
+    """Importing the registry runs no subprocess and reads no
+    CORRECTNESS_r*.json artifact, and its order is registration order:
+    walking ``queries()``, the defining family module never goes back
+    to one imported earlier."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", _IMPORT_AUDIT],
+        cwd=root,
+        capture_output=True,
+        text=True,
+        timeout=300,
+        check=True,
+    )
+    assert json.loads(out.stdout.splitlines()[-1]) == []
+
+    positions = [
+        FAMILIES.index(
+            os.path.splitext(
+                os.path.basename(inspect.getsourcefile(inspect.unwrap(fn)))
+            )[0]
+        )
+        for fn in QUERIES.values()
+    ]
+    assert positions == sorted(positions)
 
 
 def test_oracle_keys_subset_of_queries():

@@ -257,70 +257,6 @@ def test_kafka_source_and_sink_build_without_broker(spark, tmp_path):
     assert writer is not None
 
 
-def test_transform_with_state_profile(spark, sf_dir):
-    """Spark 4 transformWithStateInPandas per-user profile: final state
-    must equal the batch aggregate.  The state-server protocol needs
-    google.protobuf on the driver; skip where the environment lacks it
-    (see streaming/stateful_v2.py)."""
-    import pytest
-
-    pytest.importorskip("google.protobuf")
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from kafka_go_cardinality_spark.sources import load_table
-    from kafka_go_cardinality_spark.streaming.stateful_v2 import (
-        user_profile_stream,
-    )
-
-    events = load_table(spark, sf_dir, "events")
-    d = tempfile.mkdtemp(prefix="kgc_tws_")
-    events.select("user_id", "event_type").coalesce(2).write.mode(
-        "overwrite"
-    ).json(d)
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        src = spark.readStream.schema("user_id long, event_type string").json(d)
-        out = user_profile_stream(src)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("tws_test")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        got = (
-            spark.table("tws_test")
-            .groupBy("user_id")
-            .agg(
-                F.max("n_events").alias("n_events"),
-                F.max("n_types").alias("n_types"),
-            )
-        )
-        want = events.groupBy("user_id").agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.count_distinct("event_type").alias("n_types"),
-        )
-        assert got.exceptAll(want).count() == 0
-        assert want.exceptAll(got).count() == 0
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
-
-
 def test_stream_grain_fanout_matches_batch_sketches(spark, sf_dir):
     """The all-grains streaming query must produce every window of every
     grain, with estimates BIT-IDENTICAL to the batch sketch twins (same
@@ -339,23 +275,6 @@ def test_stream_grain_fanout_matches_batch_sketches(spark, sf_dir):
         for r in m.queries()["q_card_day_approx"](spark, sf_dir).collect()
     }
     assert stream_day == batch_day
-
-
-def test_stream_profile_registration_matches_environment():
-    """q_stream_profile is registered exactly when the
-    transformWithState protocol's google.protobuf dependency exists
-    (queries_streaming._register_stream_profile)."""
-    import __spark_entry__ as entry_mod
-
-    try:
-        import google.protobuf  # noqa: F401
-        has_dep = True
-    except ImportError:
-        has_dep = False
-    registered = "q_stream_profile" in entry_mod.queries()
-    assert registered == has_dep
-    if registered:
-        assert "q_stream_profile" in entry_mod.oracle_sql()
 
 
 def test_vec_neardup_distinct_parity_under_duplicate_vec_ids(spark, tmp_path):
