@@ -7,7 +7,6 @@ Every exact grain gets a DuckDB oracle; approx twins are rows-only.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from kafka_go_cardinality_spark.operators.cardinality import (
     GRAINS,
@@ -36,6 +35,7 @@ from kafka_go_cardinality_spark.operators.cardinality import (
 )
 from kafka_go_cardinality_spark.queries import query
 from kafka_go_cardinality_spark.sources import load_table
+from kafka_go_cardinality_spark.streaming.pipeline import USER_MSG_SCHEMA, json_fields
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -136,11 +136,6 @@ def q_stats_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stats_shape(_events(spark, sf_dir))
 
 
-USER_MSG_SCHEMA = StructType(
-    [StructField("uid", StringType()), StructField("ts", LongType())]
-)
-
-
 def _as_wire(events: DataFrame) -> DataFrame:
     """Re-encode events as the reference's wire format — one JSON object
     ``{"uid": ..., "ts": <unix seconds>}`` per record
@@ -190,16 +185,12 @@ def q_malformed_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("raw"))
         .alias("raw")
     )
-    # Extract fields BEFORE filtering: a predicate on the struct column
-    # gets pushed below the projection and re-evaluates from_json per
-    # reference (measured 1.5× slower).  Malformed input parses to a null
-    # struct, so null-uid is exactly the parse-failure signal — which
-    # ALSO classifies a well-formed record missing its uid as malformed
-    # (deliberate: a uid-less record is useless to a cardinality engine;
-    # the oracle's user_id IS NOT NULL spells the same policy).
-    parsed = corrupted.select(
-        F.from_json(F.col("raw"), USER_MSG_SCHEMA).alias("msg")
-    ).select(F.col("msg.uid").alias("uid"), F.col("msg.ts").alias("ts"))
+    # Malformed input parses to NULL fields, so null-uid is exactly the
+    # parse-failure signal — which ALSO classifies a well-formed record
+    # missing its uid as malformed (deliberate: a uid-less record is
+    # useless to a cardinality engine; the oracle's user_id IS NOT NULL
+    # spells the same policy).
+    parsed = corrupted.select(json_fields(F.col("raw"), USER_MSG_SCHEMA))
     return parsed.filter(F.col("uid").isNotNull())
 
 

@@ -416,6 +416,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from kafka_go_cardinality_spark.streaming.pipeline import (
         interval_join_streams,
+        json_fields,
         replay_to_memory,
     )
 
@@ -431,13 +432,8 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         parsed = (
             spark.readStream.text(wire)
-            .select(F.from_json(F.col("value"), schema).alias("m"))
-            .filter(F.col("m").isNotNull())
-            .select(
-                F.col("m.uid").alias("uid"),
-                F.timestamp_seconds(F.col("m.ts")).alias("ts"),
-                F.col("m.etype").alias("etype"),
-            )
+            .select(json_fields(F.col("value"), schema))
+            .select("uid", F.timestamp_seconds("ts").alias("ts"), "etype")
         )
         views = parsed.filter(F.col("etype") == "view").drop("etype")
         clicks = parsed.filter(F.col("etype") == "click").drop("etype")

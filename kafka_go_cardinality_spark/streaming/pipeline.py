@@ -45,6 +45,14 @@ Scale notes (100 TB / 1000 executors):
   ephemeral checkpoint, so it caps the count at the cores that run it:
   every state partition is loaded and committed every micro-batch, and
   partitions beyond the cores only add that fixed cost.
+- Each wire line is parsed once (``json_fields``): a filter on a parsed
+  struct is pushed below its projection and re-parses the line per field.
+- A replay also lifts ``ObjectHashAggregate``'s sort-fallback threshold
+  to 16384 groups per task (at most 256 MiB of dense lg_k=14 sketches)
+  and writes its checkpoint through Hadoop FileSystem renames, which fork
+  no process.  Both are replay-scoped: a durable sink keeps Spark's
+  ``FileContext`` checkpoint manager and the session's aggregate
+  threshold (see replay_to_memory).
 """
 
 from __future__ import annotations
@@ -123,24 +131,39 @@ def file_user_source(spark: SparkSession, path: str) -> DataFrame:
     return spark.readStream.text(path)
 
 
+def json_fields(value: Column, schema: StructType) -> Column:
+    """A generator over ``value`` parsed ONCE by ``from_json``: one output
+    row per input row, the schema's fields as top-level columns (all NULL
+    where PERMISSIVE parsing fails).  Use it as the only column of a
+    ``select`` and filter on its output columns.
+
+    The plain form — ``select(from_json(...).alias("m"))`` then a filter on
+    ``m.field`` — parses each line several times: Catalyst pushes the
+    filter below the projection and prunes each copy of ``from_json`` to a
+    different schema, so subexpression elimination cannot merge them
+    (four parses per line in ``parse_user_events``).  A filter cannot be
+    pushed below a ``Generate`` whose output it reads, so the one-element
+    ``inline`` keeps the executed plan at one ``from_json`` per line and
+    returns the same rows."""
+    return F.inline(F.array(F.from_json(value, schema)))
+
+
 def parse_user_events(raw: DataFrame) -> DataFrame:
     """[CORE C2+C3] Wire bytes → typed events.
 
-    ``from_json`` in PERMISSIVE mode yields NULL on malformed input; the
-    filter is the reference's log-and-continue skip (kafkaio.go:77-81).
-    ``ts`` is Unix *seconds* (processor.go:45) → proper TimestampType at
-    the source boundary, never downstream (SURVEY.md §7.3).
+    ``from_json`` in PERMISSIVE mode yields NULL fields on malformed
+    input; the filter is the reference's log-and-continue skip
+    (kafkaio.go:77-81).  Each line is parsed once (``json_fields``): the
+    parse was the replay's largest allocator, about half of the bytes a
+    60k-line 5-grain replay allocates, when the pushed-down filter made
+    it run four times per line.  ``ts`` is Unix *seconds* (processor.go:45)
+    → proper TimestampType at the source boundary, never downstream
+    (SURVEY.md §7.3).
     """
-    parsed = raw.select(
-        F.from_json(F.col("value").cast("string"), USER_MSG_SCHEMA).alias("msg")
-    )
-    return parsed.filter(
-        F.col("msg").isNotNull()
-        & F.col("msg.uid").isNotNull()
-        & F.col("msg.ts").isNotNull()
-    ).select(
-        F.col("msg.uid").alias("uid"),
-        F.timestamp_seconds(F.col("msg.ts")).alias("ts"),
+    return (
+        raw.select(json_fields(F.col("value").cast("string"), USER_MSG_SCHEMA))
+        .filter(F.col("uid").isNotNull() & F.col("ts").isNotNull())
+        .select("uid", F.timestamp_seconds("ts").alias("ts"))
     )
 
 
@@ -396,8 +419,31 @@ def replay_to_memory(
     replay of a 60k-line wire on 4 cores (32 → 4 instances): state
     commit 2.4 → 0.3 s per batch, 165 → 25 tasks, CPU time halved.
 
-    Both confs are restored, and the checkpoint removed, on every exit —
-    including a query that fails to start."""
+    Two more replay-scoped confs:
+
+    - The checkpoint is written through Spark's
+      ``FileSystemBasedCheckpointFileManager`` instead of the
+      ``FileContext`` default, whose local-filesystem renames fork a
+      ``readlink`` process twice per rename (hundreds per 60k-line
+      replay).  FileContext's stricter rename guards against a
+      second writer racing on the same checkpoint; this checkpoint is a
+      fresh ``mkdtemp`` deleted on return, so there is none, and a POSIX
+      rename stays atomic.  ``.crc`` files and checkpoint checksums stay
+      on.  Durable sinks (``kafka_stats_sink``) keep the session's
+      FileContext manager.
+    - ``ObjectHashAggregate`` keeps up to 16384 groups per task in its
+      hash map before it falls back to sort mode, instead of 128.  Every
+      aggregate task of the 60k-line 5-grain replay had more than 128
+      (minute, grain) groups, so every one sorted.  A dense lg_k=14 HLL
+      buffer is 16 KiB, which bounds the map at 256 MiB per task, and the
+      replay's minute sketches are sparse; above 16384 groups Spark still
+      falls back.  One micro-batch of a 30-day wire touches at most about
+      8.7k minutes.  The threshold can change the order in which
+      partial sketches merge, which moves an estimate only within HLL
+      error; no registered replay's rows move at fixture scale.
+
+    All four confs are restored, and the checkpoint removed, on every
+    exit — including a query that fails to start and a timeout."""
     spark = stats.sparkSession
     ckpt = _ephemeral_checkpoint_dir()
     confs = {
@@ -405,6 +451,12 @@ def replay_to_memory(
             "true" if no_data_batch else "false"
         ),
         SHUFFLE_PARTITIONS: str(core_capped_partitions(spark)),
+        "spark.sql.streaming.checkpointFileManagerClass": (
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager"
+        ),
+        # 16384 groups × a 16 KiB dense lg_k=14 sketch = 256 MiB per task.
+        "spark.sql.objectHashAggregate.sortBased.fallbackThreshold": "16384",
     }
     query = None
     try:
@@ -424,9 +476,11 @@ def replay_to_memory(
                 # active query aborts it asynchronously — and RAISE: the
                 # memory sink holds partial aggregates at this point, and
                 # returning normally would serve them to the caller as the
-                # query's complete result.
+                # query's complete result.  The sink's table was registered
+                # at start(): drop it, so no later read serves those rows.
                 query.stop()
                 query.awaitTermination(30)
+                spark.catalog.dropTempView(table_name)
                 raise TimeoutError(
                     f"streaming replay {table_name!r} exceeded {timeout_s}s "
                     "and was stopped; the memory sink is partial and must "

@@ -15,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kafka_go_cardinality_spark.streaming import (
+    USER_MSG_SCHEMA,
     file_user_source,
     parse_user_events,
     replay_to_memory,
@@ -58,6 +59,108 @@ def test_stream_parse_skips_malformed(spark, wire_dir):
     assert counted.collect()[0]["count"] == 1_960
 
 
+def _optimized_plan(df) -> str:
+    """The optimized logical plan as ``explain`` prints it (which, unlike
+    ``queryExecution().optimizedPlan()``, also works on a stream)."""
+    text = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "extended"
+    )
+    return text.split("== Optimized Logical Plan ==")[1].split("== Physical Plan ==")[0]
+
+
+def _from_json_calls(df) -> int:
+    return _optimized_plan(df).count("from_json(")
+
+
+def test_wire_parsers_parse_each_line_once(spark, wire_dir, sf_dir, monkeypatch):
+    """Every wire parser's optimized plan holds one ``from_json`` per
+    scan of the wire.  With a filter on a parsed struct's fields, Catalyst
+    pushes the filter below the projection and prunes each copy to a
+    different schema, so the line is parsed once per field referenced
+    (four times in parse_user_events)."""
+    import __spark_entry__ as entry
+    from kafka_go_cardinality_spark.streaming import pipeline as pl
+
+    assert _from_json_calls(parse_user_events(file_user_source(spark, wire_dir))) == 1
+    assert _from_json_calls(parse_user_events(spark.read.text(wire_dir))) == 1
+    qs = entry.queries()
+    assert _from_json_calls(qs["q_malformed_filter"](spark, sf_dir)) == 1
+
+    # The stream-stream join reads the wire once per side; capture the
+    # built join instead of replaying it.
+    class Built(Exception):
+        pass
+
+    def capture(stats, *args, **kwargs):
+        raise Built(stats)
+
+    monkeypatch.setattr(pl, "replay_to_memory", capture)
+    with pytest.raises(Built) as built:
+        qs["q_stream_stream_join"](spark, sf_dir)
+    joined = built.value.args[0]
+    scans = _optimized_plan(joined).count("FileSource[")
+    assert scans == 2
+    assert _from_json_calls(joined) == scans
+
+
+# Wire lines whose decoding is easy to get wrong; None is SQL NULL.
+EDGE_LINES = [
+    '{"uid":"a","ts":1600000000}',
+    '{"uid":"b","ts":"1600000000"}',
+    '{"uid":"c","ts":1.6e9}',
+    '{"uid":"c2","ts":7.5}',
+    '{"uid":"d","ts":-5}',
+    '{"uid":"e","ts":99999999999999999999999}',
+    '{"uid":"f","ts":true}',
+    '{"uid":"g","ts":null}',
+    '{"uid":7,"ts":1}',
+    '{"uid":{"x":1},"ts":1}',
+    '{"uid":null,"ts":1}',
+    '{"ts":1}',
+    '{"uid":"h","ts":2,"extra":{"n":[1,{"m":null}]}}',
+    '{"uid":"i","uid":"j","ts":3}',
+    '{"UID":"k","ts":4}',
+    '{"uid":"l","ts":',
+    "",
+    "   ",
+    "null",
+    "[]",
+    "42",
+    '[{"uid":"m","ts":5}]',
+    '[{"uid":"o","ts":8},{"uid":"p","ts":9}]',
+    '{"uid":"ñü日本","ts":6}',
+    None,
+    '{"uid":"q","ts":10}',
+]
+
+
+def test_parse_user_events_matches_struct_filter_parse(spark):
+    """The one-parse form returns exactly the rows of the struct-filter
+    expression it replaced, on edge-case lines, for a string ``value``
+    (file source) and a binary one (Kafka source)."""
+
+    def struct_filter_parse(raw):
+        parsed = raw.select(
+            F.from_json(F.col("value").cast("string"), USER_MSG_SCHEMA).alias("msg")
+        )
+        return parsed.filter(
+            F.col("msg").isNotNull()
+            & F.col("msg.uid").isNotNull()
+            & F.col("msg.ts").isNotNull()
+        ).select(
+            F.col("msg.uid").alias("uid"),
+            F.timestamp_seconds(F.col("msg.ts")).alias("ts"),
+        )
+
+    text = spark.createDataFrame([(v,) for v in EDGE_LINES], "value string")
+    binary = text.select(F.col("value").cast("binary").alias("value"))
+    for raw in (text, binary):
+        got = sorted(map(tuple, parse_user_events(raw).collect()))
+        exp = sorted(map(tuple, struct_filter_parse(raw).collect()))
+        assert got == exp
+        assert len(got) >= 7
+
+
 def test_stream_matches_batch_on_same_wire(spark, wire_dir):
     """The streaming day-grain HLL over the file replay must equal the
     identical batch aggregation over the identical parsed rows — HLL merge
@@ -69,8 +172,6 @@ def test_stream_matches_batch_on_same_wire(spark, wire_dir):
         ),
     )
     batch_raw = spark.read.text(wire_dir)
-    from kafka_go_cardinality_spark.streaming.pipeline import USER_MSG_SCHEMA
-
     batch = (
         batch_raw.select(
             F.from_json(F.col("value"), USER_MSG_SCHEMA).alias("msg")
@@ -612,6 +713,21 @@ def _state_instances(query) -> int:
     return query.lastProgress.stateOperators[0].numStateStoreInstances
 
 
+# Every session conf replay_to_memory overrides for the replay's duration.
+REPLAY_CONF_KEYS = (
+    "spark.sql.streaming.noDataMicroBatches.enabled",
+    "spark.sql.shuffle.partitions",
+    "spark.sql.streaming.checkpointFileManagerClass",
+    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
+)
+
+
+def _replay_confs(spark) -> dict:
+    """The session's explicit value of each replay conf; a key that is
+    unset (Spark's default applies) is absent."""
+    return {k: v for k, v in spark.conf.getAll.items() if k in REPLAY_CONF_KEYS}
+
+
 def test_replay_caps_state_partitions_at_cores(spark, wire_dir, monkeypatch):
     """replay_to_memory runs a replay at min(shuffle.partitions,
     defaultParallelism) state partitions — partitions beyond the cores
@@ -627,9 +743,11 @@ def test_replay_caps_state_partitions_at_cores(spark, wire_dir, monkeypatch):
     try:
         name = f"t_{uuid.uuid4().hex[:8]}"
         parsed = parse_user_events(file_user_source(spark, wire_dir))
+        before = _replay_confs(spark)
         query = replay_to_memory(pl.stream_grain_fanout(parsed), name)
         assert _state_instances(query) == cores
         assert spark.conf.get(key) == str(2 * cores)
+        assert _replay_confs(spark) == before
 
         def exact_day():
             name = f"t_{uuid.uuid4().hex[:8]}"
@@ -659,15 +777,12 @@ def test_replay_start_failure_leaves_session_clean(
     from pyspark.errors import AnalysisException
 
     monkeypatch.setenv("KGC_CHECKPOINT_SCRATCH", str(tmp_path))
-    keys = (
-        "spark.sql.streaming.noDataMicroBatches.enabled",
-        "spark.sql.shuffle.partitions",
-    )
-    prev_parts = spark.conf.get(keys[1])
+    key = "spark.sql.shuffle.partitions"
+    prev_parts = spark.conf.get(key)
     # Above the core count, so a leaked cap would show.
-    spark.conf.set(keys[1], str(2 * spark.sparkContext.defaultParallelism))
+    spark.conf.set(key, str(2 * spark.sparkContext.defaultParallelism))
     try:
-        before = {k: spark.conf.get(k, None) for k in keys}
+        before = _replay_confs(spark)
         parsed = parse_user_events(file_user_source(spark, wire_dir))
         with pytest.raises(AnalysisException):
             replay_to_memory(
@@ -675,7 +790,44 @@ def test_replay_start_failure_leaves_session_clean(
                 f"t_{uuid.uuid4().hex[:8]}",
                 output_mode="append",
             )
-        assert {k: spark.conf.get(k, None) for k in keys} == before
+        assert _replay_confs(spark) == before
         assert not list(tmp_path.glob("kgc_ckpt_*"))
     finally:
-        spark.conf.set(keys[1], prev_parts)
+        spark.conf.set(key, prev_parts)
+
+
+def test_replay_timeout_leaves_session_clean(spark, wire_dir, tmp_path, monkeypatch):
+    """A replay that cannot finish within ``timeout_s`` (every row of the
+    wire sleeps) must raise TimeoutError, leave no query active, restore
+    every conf it overrides — an explicitly set conf to its value, an
+    unset one to unset — and serve no sink table: the memory sink holds
+    partial aggregates at that point."""
+    monkeypatch.setenv("KGC_CHECKPOINT_SCRATCH", str(tmp_path))
+    cores = spark.sparkContext.defaultParallelism
+    prior = {k: spark.conf.get(k, None) for k in REPLAY_CONF_KEYS}
+    explicit = {REPLAY_CONF_KEYS[0]: "true", REPLAY_CONF_KEYS[1]: str(2 * cores)}
+    try:
+        for k in REPLAY_CONF_KEYS:
+            spark.conf.unset(k)
+        for k, v in explicit.items():
+            spark.conf.set(k, v)
+        assert _replay_confs(spark) == explicit
+        # 2,000 lines × 20 ms over the cores: seconds of work per replay.
+        slow = parse_user_events(file_user_source(spark, wire_dir)).select(
+            "uid", F.expr("reflect('java.lang.Thread', 'sleep', 20L)").alias("z")
+        )
+        name = f"t_{uuid.uuid4().hex[:8]}"
+        with pytest.raises(TimeoutError):
+            replay_to_memory(
+                slow.groupBy("uid").agg(F.count("z")), name, timeout_s=0.5
+            )
+        assert not [q for q in spark.streams.active if q.name == name]
+        assert _replay_confs(spark) == explicit
+        assert not spark.catalog.tableExists(name)
+        assert not list(tmp_path.glob("kgc_ckpt_*"))
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
